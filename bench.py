@@ -72,11 +72,6 @@ SIZE_SCALE = int(os.environ.get("SPARK_GRAFT_SIZE_SCALE", "3"))
 # kills the toy-vocabulary distributional merges (precision 0.013 -> ~1);
 # 1 restores the unigram workload every r2-r4 artifact recorded
 SIMHASH_NGRAM = int(os.environ.get("SPARK_GRAFT_SIMHASH_NGRAM", "3"))
-# one-action fused shape (NearDupConfig.cache_signatures): the fused
-# edges job caches the signature scan executor-local instead of
-# committing a parquet signatures stage first — one fewer action +
-# commit + plan barrier (core-invariant driver time)
-CACHE_SIG = os.environ.get("SPARK_GRAFT_CACHE_SIG", "0") == "1"
 
 
 # scaling-leg cluster stand-in: "executors" (default) = local-cluster
@@ -376,7 +371,6 @@ def run_leg(cores: int, clips_path: str, n: int) -> None:
         "size_scale": SIZE_SCALE,
         "fused": fused,
         "simhash_ngram": SIMHASH_NGRAM,
-        "cache_sig": CACHE_SIG and fused,
         **(
             {"executors": max(1, cores // EXEC_CORES), "exec_cores": EXEC_CORES}
             if executors
@@ -460,7 +454,7 @@ def cluster_job(
     try:
         cfg = NearDupConfig(
             jaccard_threshold=0.5, max_hamming=4,
-            fused_pairs=fused, include_exact_hashes=False,
+            fused_pairs=fused,
             # keep_shingles=False is the extreme-scale configuration
             # (signature-estimated Jaccard verify, ~5x smaller signatures
             # table — pipeline.py): A/B knob for the scaling study
@@ -487,9 +481,6 @@ def cluster_job(
             # unigram for A/Bs). Changes the WORKLOAD (pair volume), so
             # it is part of every leg record and the archived-floor match
             simhash_ngram=SIMHASH_NGRAM,
-            # one-action fused shape (signatures cached executor-local
-            # instead of a committed parquet stage) — A/B knob
-            cache_signatures=CACHE_SIG and fused,
         )
         clusters, manifests = run_near_dup_pipeline(spark, clips_path, workdir, cfg)
         # row count from the clusters stage manifest (Parquet footers,
@@ -756,9 +747,7 @@ def archived_scaling_floor(
                   # legs recorded before round 5 were all unigram SimHash;
                   # the trigram workload has far fewer pair rows, so the
                   # two must never share a floor
-                  "simhash_ngram": (SIMHASH_NGRAM, 1),
-                  # one-action cached-signatures shape vs two-stage shape
-                  "cache_sig": (CACHE_SIG, False)}
+                  "simhash_ngram": (SIMHASH_NGRAM, 1)}
     best: dict[int, tuple[dict, str]] = {}
     try:
         names = sorted(os.listdir(archive_dir))

@@ -213,8 +213,6 @@ class Stage:
     # source clips table — fingerprinted into the manifest so changed
     # input data invalidates the stage
     external_inputs: list[str] = field(default_factory=list)
-    # optional callable computing extra metrics from the materialized output
-    metrics_fn: Callable[[DataFrame], dict] | None = None
     # config fingerprint: a string naming the build-parameter choices that
     # change this stage's OUTPUT for identical input data (e.g.
     # "int_ids=True"). Content fingerprints cannot see a pure config flip,
@@ -388,21 +386,9 @@ class StageRunner:
         return results
 
     def _run_one(self, st: Stage) -> dict:
-        # SPARK_GRAFT_STAGE_DEBUG=1: phase timing to stderr — the
-        # driver-side (core-count-invariant) cost decomposition per stage
-        dbg = os.environ.get("SPARK_GRAFT_STAGE_DEBUG") == "1"
-        marks: list[tuple[str, float]] = []
-
-        def mark(label: str) -> None:
-            if dbg:
-                marks.append((label, time.time()))
-
         t0 = time.time()
-        mark("start")
         inputs = {name: self.load(name) for name in st.inputs}
-        mark("load_inputs")
         built = st.build(self.spark, **inputs)
-        mark("build")
         build_metrics: dict = {}
         if isinstance(built, tuple):
             df, build_metrics = built
@@ -411,53 +397,27 @@ class StageRunner:
 
         final = self.data_path(st.name)
         schema_json = readback_schema_json(df)
-        mark("schema_json")
         snapshot_id = None
         if self.use_snapshots:
             table = self._table(st.name)
             snapshot_id = table.overwrite(df)
-            files = [
-                final / f["path"] for f in table.manifest(snapshot_id)["files"]
-            ]
-            n_rows, partitions = _scan_files(files, final)
+            n_rows, partitions = _scan_files(
+                [final / f["path"] for f in table.manifest(snapshot_id)["files"]],
+                final,
+            )
         else:
             tmp = self.workdir / f"_tmp-{st.name}-{uuid.uuid4().hex[:8]}"
             df.write.mode("overwrite").parquet(str(tmp))
-            mark("write_action")
             if final.exists():
                 shutil.rmtree(final)
             os.rename(tmp, final)
             # rows + per-partition records from footers: zero Spark jobs
             n_rows, partitions = _scan_parquet_dir(final)
-            mark("footer_scan")
         # observe-mode metrics (operators/pairs._observed_metrics) are
         # callables resolvable only after the write action above ran
         build_metrics = {
             k: (v() if callable(v) else v) for k, v in build_metrics.items()
         }
-        # read with THIS run's schema, not load()'s manifest lookup — the
-        # stage's previous manifest (if any) may describe an older schema
-        if st.metrics_fn:
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(json.loads(schema_json))
-            reader = self.spark.read.schema(schema)
-            if self.use_snapshots:
-                # data lives under <root>/data/batch-*/ — reading the
-                # table ROOT yields zero rows; read the snapshot's own
-                # file list (already resolved above)
-                metrics_df = (
-                    reader.parquet(*[str(f) for f in files])
-                    if files
-                    else self.spark.createDataFrame([], schema)
-                )
-            else:
-                metrics_df = reader.parquet(str(final))
-            extra = st.metrics_fn(metrics_df)
-        else:
-            extra = {}
-        extra = {**build_metrics, **extra}
-        mark("metrics")
         manifest = {
             "stage": st.name,
             "rows": n_rows,
@@ -470,24 +430,11 @@ class StageRunner:
             },
             "fingerprint": fingerprint_listing(partitions),
             "schema": schema_json,
-            "metrics": extra,
+            "metrics": build_metrics,
             **({"params": st.params} if st.params is not None else {}),
             **({"snapshot_id": snapshot_id} if snapshot_id is not None else {}),
         }
         self.manifest_path(st.name).write_text(json.dumps(manifest, indent=2))
-        if dbg:
-            import sys as _sys
-
-            prev = marks[0][1]
-            parts = []
-            for label, ts in marks[1:]:
-                parts.append(f"{label}={ts - prev:.3f}")
-                prev = ts
-            parts.append(f"manifest={time.time() - prev:.3f}")
-            print(
-                f"[stage-debug] {st.name}: " + " ".join(parts),
-                file=_sys.stderr, flush=True,
-            )
         return manifest
 
     # -- lineage / metrics tables -------------------------------------------

@@ -3,23 +3,21 @@
 DAG (each stage a checkpointed Parquet/Iceberg table, resumable):
 
   clips ──> signatures  (ONE scan + ONE normalize: MinHash sigs + shingles
-         │               + SimHash + winnowed substring grams + full-text
-         │               hash, all from one narrow mapInPandas —
-         │               operators/signatures.py; round 2 paid ~4 separate
-         │               scan+normalize passes here, the measured
-         │               memory-bandwidth bottleneck)
-         │      ├─> minhash_pairs   (LSH bands -> capped bucket join -> Jaccard verify)
-         │      ├─> simhash_pairs   (bit bands -> SALTED bucket join -> Hamming verify)
-         │      ├─> exact_pairs     (full-transcript tkey buckets)
-         │      └─> substring_pairs (explode grams -> capped bucket join)
-         ├─> exact_hashes  (paragraph sha1-u64 groupBy — the cc_net build-side
-         │                  artifact; paragraph granularity, so it scans clips)
-         └────────────> edges (union) -> components (alt-star CC) -> clusters
+                         + SimHash + winnowed substring grams + full-text
+                         hash, all from one narrow mapInPandas —
+                         operators/signatures.py; round 2 paid ~4 separate
+                         scan+normalize passes here, the measured
+                         memory-bandwidth bottleneck)
+                ├─> minhash_pairs   (LSH bands -> capped bucket join -> Jaccard verify)
+                ├─> simhash_pairs   (bit bands -> SALTED bucket join -> Hamming verify)
+                ├─> exact_pairs     (full-transcript tkey buckets)
+                └─> substring_pairs (explode grams -> capped bucket join)
+                          └──> clusters (union -> alt-star CC)
 
-(default fold_edges=True: the union feeds CC directly — CC's round-0
-checkpoint already materializes the canonical edge set, so a separate
-edges table is a redundant second write of the same rows; see
-NearDupConfig.fold_edges)
+The pair tables feed CC directly: CC's round-0 checkpoint already
+materializes the canonical edge set, so no separate edges table is
+written. ``fused_pairs=True`` instead computes the four families inside
+ONE ``edges`` stage (signatures -> edges -> clusters).
 
 Skew handling: every pair generator runs through the capped bucket join
 (``operators/pairs.py``) with drop metrics recorded in the stage manifest;
@@ -35,11 +33,11 @@ the payload (verify via ``.explain``: ReadSchema excludes ``bytes``).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cc_net_spark.operators import exact_dedup as ed
 from cc_net_spark.operators import minhash as mh
 from cc_net_spark.operators import simhash as sh
 from cc_net_spark.operators.connected_components import assign_clusters, connected_components
@@ -75,27 +73,10 @@ class NearDupConfig:
     bucket_cap: int = 200
     gram_cap: int = 100
     # fused_pairs=True computes all pair families inside ONE 'edges' stage
-    # (one materialization instead of five): fewer actions and fewer
+    # (one materialization instead of four): fewer actions and fewer
     # checkpoints — the right shape when stage-level resume granularity
-    # matters less than latency. include_exact_hashes toggles the cc_net
-    # hash-table artifact stage (not consumed by clustering).
+    # matters less than latency.
     fused_pairs: bool = False
-    # cache_signatures (fused_pairs only): skip the materialized
-    # signatures stage — the fused edges job persists the signature scan
-    # executor-local (DISK_ONLY) and the four pair families read the
-    # cache. ONE action instead of two: saves the signatures stage
-    # commit + parquet read-back + edges plan barrier (~2.5-3 s of
-    # core-invariant driver time), at the cost of the signatures resume
-    # checkpoint (an executor loss recomputes lost cache partitions from
-    # source; a driver loss reruns the edges stage). validate_ids
-    # "observe" is skipped in this shape (its Observation rides the
-    # signatures write); "strict" still works.
-    cache_signatures: bool = False
-    include_exact_hashes: bool = True
-    # cluster-profile metrics (n_clusters distinct count) cost two extra
-    # Spark jobs on the final table — opt-in (manifests already carry
-    # per-partition row counts for free from the Parquet footers)
-    collect_metrics: bool = False
     # multimodal fusion: also generate AUDIO-payload near-dup edges
     # (occupancy-fingerprint buckets -> PCM-SNR verify) and union them
     # into the cluster graph. Off by default: requires the bytes column.
@@ -117,18 +98,6 @@ class NearDupConfig:
     # slots, overlapping the per-stage driver barriers (see
     # StageRunner.run). 1 keeps the fully sequential order.
     max_parallel_stages: int = 1
-    # staged mode only: skip the materialized 'edges' stage and feed the
-    # clusters stage the pair tables directly. The edges table's ONLY
-    # consumer is the distinct->CC step, and connected_components
-    # checkpoints the canonical edge set as its round-0 cut anyway — the
-    # staged edges parquet was a REDUNDANT second materialization of the
-    # same rows (at 10^12-clip scale, a full write+read of the edge set;
-    # locally, ~5 Spark jobs of serial barrier). Resume granularity is
-    # unchanged where it matters: the pair tables stay checkpoints, and
-    # edges are a cheap union of them. fused_pairs ignores this (its
-    # edges stage is the single materialization protecting CC's sizing
-    # count from recomputing all four pair families).
-    fold_edges: bool = True
     # int_ids: run the pair families + CC over a FIXED-WIDTH surrogate id
     # (sid = xxhash64(clip_id), added JVM-side to the signatures table)
     # instead of the string clip_id, mapping back to strings in one
@@ -205,10 +174,7 @@ def build_stages(
 
         return read_parquet(spark, clips_path).select(idc, txt)
 
-    def stage_exact_hashes(spark: SparkSession) -> DataFrame:
-        return ed.build_hashes(ed.paragraph_hashes(load_clips(spark), txt, idc))
-
-    def _raw_signatures(spark: SparkSession) -> DataFrame:
+    def stage_signatures(spark: SparkSession):
         # THE one corpus scan: every downstream pair family reads this table
         sig = fused_signatures(
             load_clips(spark), txt, idc,
@@ -222,10 +188,6 @@ def build_stages(
             # surrogate id, JVM-side (whole-stage codegen, no UDF cost);
             # 8 bytes/row in the signatures parquet
             sig = sig.withColumn("sid", F.xxhash64(F.col(idc)))
-        return sig
-
-    def stage_signatures(spark: SparkSession) -> DataFrame:
-        sig = _raw_signatures(spark)
         if cfg.validate_ids == "none":
             return sig
         # null-id contract check riding the stage's own write action
@@ -350,27 +312,6 @@ def build_stages(
             )
         return out, {"pairgen": lambda: resolve().__dict__}
 
-    def stage_edges(
-        spark: SparkSession,
-        exact_pairs: DataFrame,
-        minhash_pairs: DataFrame,
-        simhash_pairs: DataFrame,
-        substring_pairs: DataFrame,
-        audio_pairs: DataFrame | None = None,
-    ) -> DataFrame:
-        def tag(df: DataFrame, kind: str) -> DataFrame:
-            return df.select("id_a", "id_b", F.lit(kind).alias("kind"))
-
-        edges = (
-            tag(exact_pairs, "exact")
-            .unionByName(tag(minhash_pairs, "minhash"))
-            .unionByName(tag(simhash_pairs, "simhash"))
-            .unionByName(tag(substring_pairs, "substring"))
-        )
-        if audio_pairs is not None:
-            edges = edges.unionByName(tag(audio_pairs, "audio"))
-        return edges
-
     def _manifest_rows(stage_name: str) -> int | None:
         if workdir is None:
             return None
@@ -382,15 +323,24 @@ def build_stages(
             return _json.loads(mpath.read_text())["rows"]
         return None
 
-    def _cluster_edges(spark: SparkSession, edges: DataFrame, edge_count: int | None) -> DataFrame:
+    def stage_clusters(spark: SparkSession, **edge_tables: DataFrame) -> DataFrame:
+        # the edge tables (the pair stages, or the fused edges stage) are
+        # unioned inline and feed CC directly. Their manifests' row sum is
+        # an upper bound on distinct canonical edges, so the CC sizing
+        # count() is skipped when they are all known.
+        edges = reduce(
+            DataFrame.unionByName,
+            [df.select("id_a", "id_b") for df in edge_tables.values()],
+        )
+        rows = [_manifest_rows(s) for s in edge_tables]
         # no pre-distinct: connected_components canonicalizes + dedups
         # once internally (the old pre-distinct paid a SECOND full
         # shuffle of the edge set, before orientation so it couldn't
         # even dedup (a,b)/(b,a) twins), and its driver union-find path
         # needs no dedup at all (union on a duplicate edge is a no-op)
         comp = connected_components(
-            edges.select("id_a", "id_b"),
-            edge_count=edge_count,
+            edges,
+            edge_count=sum(rows) if None not in rows else None,
             checkpoint_dir=cfg.cc_checkpoint_dir,
         )
         if cfg.int_ids:
@@ -408,37 +358,6 @@ def build_stages(
             )
         ids = load_clips(spark).select(idc)
         return assign_clusters(ids, comp, idc)
-
-    def stage_clusters(spark: SparkSession, edges: DataFrame) -> DataFrame:
-        # the edges stage manifest already knows its row count (an upper
-        # bound on distinct canonical edges) — pass it down so the CC
-        # operator can skip its sizing count() job
-        return _cluster_edges(spark, edges, _manifest_rows("edges"))
-
-    def stage_clusters_folded(
-        spark: SparkSession,
-        exact_pairs: DataFrame,
-        minhash_pairs: DataFrame,
-        simhash_pairs: DataFrame,
-        substring_pairs: DataFrame,
-        audio_pairs: DataFrame | None = None,
-    ) -> DataFrame:
-        # fold_edges: union the pair tables inline (no materialized edges
-        # stage — see NearDupConfig.fold_edges). The pair manifests' row
-        # sum is an upper bound on distinct canonical edges, so the CC
-        # sizing count() is still skipped when they are all known.
-        edges = stage_edges(
-            spark, exact_pairs, minhash_pairs, simhash_pairs, substring_pairs,
-            audio_pairs,
-        )
-        rows = [_manifest_rows(s) for s in edge_inputs]
-        edge_count = sum(rows) if all(r is not None for r in rows) else None
-        return _cluster_edges(spark, edges, edge_count)
-
-    def dup_ratio(df: DataFrame) -> dict:
-        agg = df.agg(F.count(F.lit(1)).alias("n")).collect()[0]
-        n_clusters = df.select("cluster_id").distinct().count()
-        return {"n_rows": agg["n"], "n_clusters": n_clusters}
 
     def stage_edges_fused(spark: SparkSession, signatures: DataFrame):
         def tag(df: DataFrame, kind: str) -> DataFrame:
@@ -458,104 +377,30 @@ def build_stages(
             metrics["audio_pairgen"] = audio_metrics["pairgen"]
         return edges, metrics
 
-    metrics_fn = dup_ratio if cfg.collect_metrics else None
     ext = [clips_path]
-    head = (
-        [Stage("exact_hashes", stage_exact_hashes, external_inputs=ext)]
-        if cfg.include_exact_hashes
-        else []
-    )
-    def stage_edges_fused_cached(spark: SparkSession):
-        """ONE-ACTION fused shape (cache_signatures=True): the signature
-        scan is persisted executor-local (DISK_ONLY — recomputable from
-        source on executor loss, Spark's standard cache tier) INSIDE the
-        edges job instead of committing a parquet stage first. Trades
-        the signatures resume checkpoint for one fewer action + stage
-        commit + edges plan barrier (~2.5-3 s of core-count-invariant
-        driver time per run — the Amdahl cost that caps short-job
-        scaling). The four families read the cache instead of the
-        parquet read-back; results are identical (parity-tested)."""
-        from pyspark import StorageLevel
-
-        sig = _raw_signatures(spark).persist(StorageLevel.DISK_ONLY)
-        edges, metrics = stage_edges_fused(spark, sig)
-        # StageRunner resolves callable metrics right AFTER the stage's
-        # write action — the earliest point the cache is no longer
-        # needed. Without this the executor-local cache (a full corpus
-        # scan's worth of blocks) is retained for the session lifetime.
-        metrics["sig_cache_released"] = lambda: bool(sig.unpersist()) or True
-        return edges, metrics
-
-    if cfg.fused_pairs and cfg.cache_signatures:
-        return [
-            *head,
-            Stage("edges", stage_edges_fused_cached, external_inputs=ext,
-                  params=_sig_params(cfg)),
-            Stage(
-                "clusters",
-                stage_clusters,
-                inputs=["edges"],
-                external_inputs=ext,
-                metrics_fn=metrics_fn,
-            ),
-        ]
+    signatures = Stage("signatures", stage_signatures, external_inputs=ext,
+                       params=_sig_params(cfg))
     if cfg.fused_pairs:
         return [
-            *head,
-            Stage("signatures", stage_signatures, external_inputs=ext,
-              params=_sig_params(cfg)),
+            signatures,
             # the fused edges stage reads only the signatures table for the
             # text families; the audio pass (if enabled) reads clips too
             Stage("edges", stage_edges_fused, inputs=["signatures"], external_inputs=ext),
-            Stage(
-                "clusters",
-                stage_clusters,
-                inputs=["edges"],
-                external_inputs=ext,
-                metrics_fn=metrics_fn,
-            ),
+            Stage("clusters", stage_clusters, inputs=["edges"], external_inputs=ext),
         ]
-    audio_stages = (
-        [Stage("audio_pairs", stage_audio_pairs, external_inputs=ext)]
-        if cfg.include_audio_pass
-        else []
-    )
-    edge_inputs = [
-        "exact_pairs", "minhash_pairs", "simhash_pairs", "substring_pairs",
-        *(["audio_pairs"] if cfg.include_audio_pass else []),
-    ]
-    tail = (
-        [
-            Stage(
-                "clusters",
-                stage_clusters_folded,
-                inputs=edge_inputs,
-                external_inputs=ext,
-                metrics_fn=metrics_fn,
-            )
-        ]
-        if cfg.fold_edges
-        else [
-            Stage("edges", stage_edges, inputs=edge_inputs),
-            Stage(
-                "clusters",
-                stage_clusters,
-                inputs=["edges"],
-                external_inputs=ext,
-                metrics_fn=metrics_fn,
-            ),
-        ]
-    )
-    return [
-        *head,
-        Stage("signatures", stage_signatures, external_inputs=ext,
-              params=_sig_params(cfg)),
+    pair_stages = [
         Stage("exact_pairs", stage_exact_pairs, inputs=["signatures"]),
         Stage("minhash_pairs", stage_minhash_pairs, inputs=["signatures"]),
         Stage("simhash_pairs", stage_simhash_pairs, inputs=["signatures"]),
         Stage("substring_pairs", stage_substring_pairs, inputs=["signatures"]),
-        *audio_stages,
-        *tail,
+    ]
+    if cfg.include_audio_pass:
+        pair_stages.append(Stage("audio_pairs", stage_audio_pairs, external_inputs=ext))
+    return [
+        signatures,
+        *pair_stages,
+        Stage("clusters", stage_clusters, inputs=[s.name for s in pair_stages],
+              external_inputs=ext),
     ]
 
 

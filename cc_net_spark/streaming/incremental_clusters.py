@@ -580,21 +580,33 @@ def compact_clusters_state(
 def _parquet_footer_rows(path: str) -> int | None:
     """Row count of a LOCAL parquet dir from footers only (no Spark job)
     — the sizing hint ``fold_new_batches`` feeds ``update``. Best-effort:
-    scheme URIs (s3a/hdfs) return None and the fold falls back to the
-    sizing count it always ran."""
+    scheme URIs (s3a/hdfs) and unreadable files (truncated or partial,
+    which pyarrow reports as ``ArrowInvalid``, a ``ValueError``) return
+    None and the fold falls back to the sizing count it always ran.
+    Files below a hidden path component are skipped the way Spark's own
+    reader skips them: ``.``-prefixed, or ``_``-prefixed unless it is a
+    ``key=value`` partition dir (e.g. a leftover ``_temporary/``)."""
     if "://" in str(path):
         return None
     from pathlib import Path
 
     import pyarrow.parquet as pq
 
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
     p = Path(path)
+    files = (
+        [
+            f for f in sorted(p.rglob("*.parquet"))
+            if not any(hidden(c) for c in f.relative_to(p).parts)
+        ]
+        if p.is_dir()
+        else [p]
+    )
     try:
-        return sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in (sorted(p.rglob("*.parquet")) if p.is_dir() else [p])
-        )
-    except OSError:
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+    except (OSError, ValueError):
         return None
 
 

@@ -64,7 +64,7 @@ def main() -> None:
     bench.warm_workers(spark, cores)
     cfg = NearDupConfig(
         jaccard_threshold=0.5, max_hamming=4,
-        fused_pairs=False, include_exact_hashes=False,
+        fused_pairs=False,
         keep_shingles=os.environ.get("SPARK_GRAFT_KEEP_SHINGLES", "1") == "1",
     )
     workdir = tempfile.mkdtemp(prefix=f"profile_jobs_{cores}_")

@@ -51,7 +51,7 @@ def main() -> None:
     bench.warm_workers(spark, cores)
     cfg = NearDupConfig(
         jaccard_threshold=0.5, max_hamming=4,
-        fused_pairs=False, include_exact_hashes=False,
+        fused_pairs=False,
         # mirror the scaling leg's config so profiles attribute the same
         # job the leg times (bench.run_leg defaults this to 0)
         keep_shingles=os.environ.get("SPARK_GRAFT_KEEP_SHINGLES", "0") == "1",

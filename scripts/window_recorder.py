@@ -92,10 +92,6 @@ _want_shape = {
     "fused": (env.get("SPARK_GRAFT_LEG_FUSED", "1") == "1", True),
     # pre-round-5 legs are all unigram-SimHash workloads (absence = 1)
     "simhash_ngram": (int(env.get("SPARK_GRAFT_SIMHASH_NGRAM", "3")), 1),
-    # one-action cached-signatures shape vs two-stage shape — mirrors
-    # bench.archived_scaling_floor so a CACHE_SIG=1 leg can never seed
-    # a default two-stage session's floors
-    "cache_sig": (env.get("SPARK_GRAFT_CACHE_SIG", "0") == "1", False),
 }
 if os.path.exists(OUT):
     with open(OUT) as f:

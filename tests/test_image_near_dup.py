@@ -113,7 +113,7 @@ def test_pipeline_manifest_records_audio_pairgen_metrics(spark, tmp_path):
 
     p = tmp_path / "clips.parquet"
     synth.generate_clips(spark, 32, seed=42, with_audio=True).write.parquet(str(p))
-    cfg = NearDupConfig(include_audio_pass=True, include_exact_hashes=False)
+    cfg = NearDupConfig(include_audio_pass=True)
     _, manifests = run_near_dup_pipeline(spark, str(p), str(tmp_path / "w"), cfg)
     pg = manifests["audio_pairs"]["metrics"]["pairgen"]
     assert set(pg) == {"n_buckets", "n_buckets_dropped", "n_rows_dropped"}

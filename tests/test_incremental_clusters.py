@@ -248,6 +248,41 @@ def test_fold_new_batches_tolerates_missing_pairs_partition(spark, tmp_path):
     assert got == {"a": "a", "b": "b"}
 
 
+def test_parquet_footer_rows_is_best_effort(spark, tmp_path):
+    """The footer row hint skips files Spark's reader skips (a leftover
+    _temporary/ or dot-prefixed path) and returns None instead of raising
+    on a truncated file, whose footer pyarrow cannot parse."""
+    from cc_net_spark.streaming.incremental_clusters import _parquet_footer_rows
+
+    d = tmp_path / "flags" / "_batch_id=0"
+    _ids(spark, ["a", "b", "c"]).write.mode("overwrite").parquet(str(d))
+    assert _parquet_footer_rows(str(d)) == 3
+    for junk in (d / "_temporary" / "0" / "part-9.parquet", d / ".hidden.parquet"):
+        junk.parent.mkdir(parents=True, exist_ok=True)
+        junk.write_bytes(b"PAR1 crash-truncated")
+    assert _parquet_footer_rows(str(d)) == 3
+    truncated = d / "part-truncated.parquet"
+    truncated.write_bytes(next(d.glob("part-*.parquet")).read_bytes()[:40])
+    assert _parquet_footer_rows(str(d)) is None
+    assert _parquet_footer_rows(str(truncated)) is None
+
+
+def test_fold_new_batches_ignores_leftover_temporary_files(spark, tmp_path):
+    """A crash-left _temporary/ part file under a flags partition must not
+    break the fold: Spark ignores it, and so does the footer size hint."""
+    from cc_net_spark.streaming.incremental_clusters import fold_new_batches
+
+    out, state = str(tmp_path / "out"), str(tmp_path / "state")
+    _write_handler_output(spark, out, BATCHES)
+    junk = tmp_path / "out" / "flags" / "_batch_id=1" / "_temporary" / "0" / "part-0.parquet"
+    junk.parent.mkdir(parents=True)
+    junk.write_bytes(b"PAR1 crash-truncated")
+    assert fold_new_batches(spark, out, state, n_state_buckets=8) == [0, 1, 2]
+    ic = IncrementalClusters(state, n_state_buckets=8)
+    got = {r["clip_id"]: r["cluster_id"] for r in ic.current(spark).collect()}
+    assert got == _batch_truth(spark)
+
+
 def test_neardup_cli_clusters_flags_validate_before_spark():
     """Arg contract (checked before any JVM startup): clusters
     compaction needs --clusters-state; stream mode still needs

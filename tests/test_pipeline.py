@@ -105,54 +105,32 @@ def test_fused_pipeline_matches_staged(spark, clips_path, tmp_path):
     from dataclasses import replace
 
     staged, _ = run_near_dup_pipeline(spark, clips_path, str(tmp_path / "ws"), CFG)
-    fused_cfg = replace(CFG, fused_pairs=True, include_exact_hashes=False)
+    fused_cfg = replace(CFG, fused_pairs=True)
     fused, m = run_near_dup_pipeline(spark, clips_path, str(tmp_path / "wf"), fused_cfg)
     a = {r["clip_id"]: r["cluster_id"] for r in staged.collect()}
     b = {r["clip_id"]: r["cluster_id"] for r in fused.collect()}
     assert a == b
     assert set(m) == {"signatures", "edges", "clusters"}
-    # ONE-ACTION fused shape (cache_signatures): signatures persisted
-    # executor-local inside the edges job instead of a committed parquet
-    # stage — exact same clusters, no signatures stage in the manifests
-    cached_cfg = replace(fused_cfg, cache_signatures=True)
-    cached, mc = run_near_dup_pipeline(
-        spark, clips_path, str(tmp_path / "wc"), cached_cfg
-    )
-    c = {r["clip_id"]: r["cluster_id"] for r in cached.collect()}
-    assert c == a
-    assert set(mc) == {"edges", "clusters"}
 
 
-def test_fold_edges_matches_materialized_edges(spark, clips_path, tmp_path):
-    """fold_edges=True (default) feeds the pair tables straight into CC;
-    it must produce exactly the clusters of the materialized-edges shape,
-    write NO edges table, and still skip CC's sizing count (edge_count
-    from the pair-stage manifests)."""
-    from dataclasses import replace
+def test_default_shape_feeds_pair_tables_to_clusters(spark, clips_path, tmp_path):
+    """The default staged shape commits the signatures, the four pair
+    tables and the clusters — no paragraph-hash table, no materialized
+    edges table — and feeds the pair tables straight into CC, which
+    still skips its sizing count (edge_count from the pair manifests)."""
     from pathlib import Path
 
-    folded_work = tmp_path / "wfold"
-    folded, mf = run_near_dup_pipeline(spark, clips_path, str(folded_work), CFG)
-    unfolded, mu = run_near_dup_pipeline(
-        spark, clips_path, str(tmp_path / "wunfold"), replace(CFG, fold_edges=False)
-    )
-    a = {r["clip_id"]: r["cluster_id"] for r in folded.collect()}
-    b = {r["clip_id"]: r["cluster_id"] for r in unfolded.collect()}
-    assert a == b
-    assert "edges" not in mf and not (folded_work / "edges").exists()
-    assert "edges" in mu
-    # the folded clusters manifest carries the pair-stage lineage directly
-    assert set(mf["clusters"]["input_fingerprints"]) == {
-        "exact_pairs", "minhash_pairs", "simhash_pairs", "substring_pairs",
-    }
-    # edge_count plumbing: pair manifests exist before clusters runs, and
-    # their row sum is below the driver threshold here, so CC must have
-    # taken the driver union-find path (which only triggers with a known
-    # count or a sizing job; either way output parity above is the gate)
-    assert all(
-        Path(folded_work, "_manifest", f"{s}.json").exists()
-        for s in ("exact_pairs", "minhash_pairs", "simhash_pairs", "substring_pairs")
-    )
+    pair_stages = {"exact_pairs", "minhash_pairs", "simhash_pairs", "substring_pairs"}
+    work = tmp_path / "wdefault"
+    _, m = run_near_dup_pipeline(spark, clips_path, str(work), CFG)
+    assert set(m) == {"signatures", *pair_stages, "clusters"}
+    assert not (work / "exact_hashes").exists()
+    assert not (work / "edges").exists()
+    # the clusters manifest carries the pair-stage lineage directly
+    assert set(m["clusters"]["input_fingerprints"]) == pair_stages
+    # edge_count plumbing: the pair manifests exist before clusters runs,
+    # so CC gets its edge_count from their row sum
+    assert all(Path(work, "_manifest", f"{s}.json").exists() for s in pair_stages)
 
 
 def test_external_input_change_invalidates_stage(spark, tmp_path):
@@ -331,7 +309,7 @@ def test_int_ids_matches_string_id_partition(spark, clips_path, tmp_path):
     member-sets must be identical, every clip present, cluster_id long."""
     base, _ = run_near_dup_pipeline(spark, clips_path, str(tmp_path / "ws"), CFG)
     int_cfg = NearDupConfig(
-        **{**CFG.__dict__, "int_ids": True, "include_exact_hashes": False}
+        **{**CFG.__dict__, "int_ids": True}
     )
     ints, _ = run_near_dup_pipeline(spark, clips_path, str(tmp_path / "wi"), int_cfg)
     assert dict(ints.dtypes)["cluster_id"] == "bigint"
@@ -352,8 +330,7 @@ def test_int_ids_with_audio_pass_partition_parity(spark, clips_path, tmp_path):
     planted clusters."""
     from dataclasses import replace
 
-    cfg = replace(CFG, int_ids=True, include_audio_pass=True,
-                  include_exact_hashes=False)
+    cfg = replace(CFG, int_ids=True, include_audio_pass=True)
     clusters, manifests = run_near_dup_pipeline(
         spark, clips_path, str(tmp_path / "work_audio_int"), cfg
     )
@@ -377,7 +354,7 @@ def test_int_ids_toggle_invalidates_resumed_workdir(spark, clips_path, tmp_path)
     base, m1 = run_near_dup_pipeline(spark, clips_path, work, CFG)
     assert dict(base.dtypes)["cluster_id"] == "string"
     int_cfg = NearDupConfig(
-        **{**CFG.__dict__, "int_ids": True, "include_exact_hashes": False}
+        **{**CFG.__dict__, "int_ids": True}
     )
     ints, m2 = run_near_dup_pipeline(spark, clips_path, work, int_cfg)
     assert not m2["signatures"].get("skipped"), "signatures stage must re-run"
@@ -402,7 +379,7 @@ def test_validate_ids_observe_fails_on_null_id(spark, tmp_path):
     with pytest.raises(Exception, match="NULL clip_id"):
         run_near_dup_pipeline(
             spark, src, str(tmp_path / "w"),
-            NearDupConfig(include_exact_hashes=False),
+            NearDupConfig(),
         )
 
 
@@ -421,7 +398,7 @@ def test_validate_ids_strict_fails_on_duplicate_id(spark, tmp_path):
     with pytest.raises(ValueError, match="duplicate"):
         run_near_dup_pipeline(
             spark, src, str(work),
-            NearDupConfig(include_exact_hashes=False, validate_ids="strict"),
+            NearDupConfig(validate_ids="strict"),
         )
     assert not (work / "_manifest" / "signatures.json").exists()
 

@@ -37,7 +37,7 @@ def test_clustering_never_reads_audio_payload(spark, clips_path, tmp_path):
     pruning must drop `bytes` from the scan ReadSchema."""
     from cc_net_spark.plans.pipeline import NearDupConfig, build_stages
 
-    cfg = NearDupConfig(fused_pairs=True, include_exact_hashes=False)
+    cfg = NearDupConfig(fused_pairs=True)
     stages = build_stages(clips_path, cfg)
     built_sig = stages[0].build(spark)
     sig_df = built_sig[0] if isinstance(built_sig, tuple) else built_sig

@@ -141,7 +141,7 @@ def test_pipeline_on_snapshot_backend_matches_plain(spark, tmp_path):
 
     p = tmp_path / "clips.parquet"
     synth.generate_clips(spark, 48, seed=42, with_audio=False).write.parquet(str(p))
-    cfg = NearDupConfig(include_exact_hashes=False)
+    cfg = NearDupConfig()
     plain, _ = run_near_dup_pipeline(spark, str(p), str(tmp_path / "a"), cfg)
     snap, m = run_near_dup_pipeline(
         spark, str(p), str(tmp_path / "b"), cfg, use_snapshots=True
@@ -159,7 +159,7 @@ def test_pipeline_estimated_jaccard_path(spark, tmp_path):
     n = 64
     p = tmp_path / "clips.parquet"
     synth.generate_clips(spark, n, seed=42, with_audio=False).write.parquet(str(p))
-    cfg = NearDupConfig(include_exact_hashes=False, keep_shingles=False)
+    cfg = NearDupConfig(keep_shingles=False)
     clusters, _ = run_near_dup_pipeline(spark, str(p), str(tmp_path / "w"), cfg)
     got = {r["clip_id"]: r["cluster_id"] for r in clusters.collect()}
     exp = {
@@ -184,16 +184,3 @@ def test_stage_runner_detects_out_of_band_snapshot_advance(spark, tmp_path):
     assert not m["nums"].get("skipped")  # re-ran, did not serve stale lineage
     assert r.load("nums").count() == 5
 
-
-def test_stage_runner_snapshot_metrics_fn_sees_rows(spark, tmp_path):
-    """metrics_fn must read the SNAPSHOT's file list, not the table root
-    (data lives under <root>/data/batch-*/ — a root read yields zero
-    rows and every metric silently computes over an empty frame)."""
-    from cc_net_spark.plans.dag import Stage, StageRunner
-
-    def build(s):
-        return s.range(0, 7)
-
-    r = StageRunner(spark, tmp_path / "w", use_snapshots=True)
-    m = r.run([Stage("nums", build, metrics_fn=lambda df: {"n": df.count()})])
-    assert m["nums"]["metrics"]["n"] == 7
